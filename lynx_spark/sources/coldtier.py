@@ -348,6 +348,8 @@ class TieredEngine(LynxEngine):
         self.cold_dir.mkdir(parents=True, exist_ok=True)
         self.expose_day = expose_day
         self._commit_cache: dict[str, dict] = {}
+        #: (namespace, table) -> (visible-file tuple, cold relation)
+        self._cold_relations: dict[tuple[str, str], tuple] = {}
         adopt_legacy_layout(self.cold_dir)
         # the directory's existence marks "managed by a commit-log
         # writer": created eagerly so a crash before the FIRST commit
@@ -851,9 +853,9 @@ class TieredEngine(LynxEngine):
           at the next flush); after it visibility flips atomically for
           the whole group.
         - Replaced files become invisible but stay on DISK until
-          ``vacuum`` — an already-planned query holds a pinned file
-          list, and the "committed parquet is never deleted" invariant
-          extends to tombstones (the Delta/Iceberg retention model).
+          ``vacuum`` — an already-captured query holds a pinned file
+          list, safe until the caller's vacuum retention window ends
+          (the Delta/Iceberg retention model).
         - Visibility is ``∪files − ∪replaced`` across commits: order-
           free because names are writer-unique and never reused, so
           the log needs no sequence numbers and folds freely.
@@ -968,32 +970,52 @@ class TieredEngine(LynxEngine):
         the hive ``day`` partition column is still derived and
         prunable. Pass the already-computed committed set when calling
         in a loop (query does) to avoid re-reading the commit log per
-        table."""
+        table. Building the relation runs a footer-merge job, so it is
+        reused (a plan, nothing persisted) until the table's sorted
+        visible-file tuple changes: a flush, an optimize or a
+        streaming-sink commit. Called under _query_lock."""
         if committed is None:
             committed = self._committed_files()
         prefix = f"{namespace}/{table}/"
-        files = [
+        files = tuple(
             str(self.cold_dir / rel)
             for rel in sorted(committed)
             if rel.startswith(prefix)
-        ]
+        )
         if not files:
             return None
-        return (
+        key = (namespace, table)
+        cached = self._cold_relations.get(key)
+        if cached is not None and cached[0] == files:
+            return cached[1]
+        df = (
             self.spark.read.option("mergeSchema", "true")
             .option("basePath", str(self.cold_dir / namespace / table))
             .parquet(*files)
         )
+        self._cold_relations[key] = (files, df)
+        return df
 
     def query(self, namespace: str, sql: str) -> DataFrame | None:
         """Union of hot snapshot and cold tier. Unknown namespace/table
         in BOTH tiers -> None (404), preserving main.rs:83 semantics.
 
-        The hot snapshot and the commit-log read happen under the SAME
-        lock a flush holds: without it, a flush racing between the two
-        reads would surface its rows in both tiers (double count). The
-        cold DataFrame is pinned to the files committed at lock time;
-        committed parquet is never deleted, so execution later is safe.
+        Only the consistent capture runs under ``_wal_lock``, the lock
+        a write and a flush hold: the hot snapshot (a deep copy) and
+        the visible-file set. Without it a flush racing between the
+        two reads would surface its rows in both tiers (double count).
+        The 404 check reads only that private copy. The Arrow build,
+        ``createDataFrame``, the cold relation and its day filters,
+        view registration and analysis run under ``_query_lock``, so
+        writes never wait behind a query's Spark work.
+
+        The cold relation is pinned to the files visible at capture.
+        A flush or an optimize never deletes a committed file, but
+        ``vacuum`` deletes replaced ones, so a pinned list stays safe
+        only within vacuum's caller-held retention window; that window
+        covers building the relation as well as executing the query.
+        The relation itself is reused across queries while the table's
+        sorted visible-file tuple is unchanged (see _cold_table).
 
         The cold scan is day-pruned from the WHERE clause's timestamp
         bounds (the same bounds that prune the hot buffer), then the
@@ -1003,31 +1025,27 @@ class TieredEngine(LynxEngine):
         with self._wal_lock:
             tables = self.buffer.tables(namespace) or {}
             committed = self._committed_files()
-            cold_tables = {
-                rel.split("/", 2)[1]
-                for rel in committed
-                if rel.split("/", 2)[0] == namespace
-            }
-            candidates = set(tables) | cold_tables
-            if table_name is not None and table_name not in candidates:
-                return None  # unknown in both tiers -> 404 (main.rs:83)
-            if self.multi_table:
-                names = referenced_tables(sql, candidates)
-                if table_name is not None:
-                    names |= {table_name}
-                if not names:
-                    return None
-            else:
-                names = {table_name}
-            views = {
-                name: self._tiered_table_df(
-                    namespace, name, tables, sql, committed
-                )
-                for name in sorted(names)
-            }
+        cold_tables = {
+            rel.split("/", 2)[1]
+            for rel in committed
+            if rel.split("/", 2)[0] == namespace
+        }
+        candidates = set(tables) | cold_tables
+        if table_name is not None and table_name not in candidates:
+            return None  # unknown in both tiers -> 404 (main.rs:83)
+        if self.multi_table:
+            names = referenced_tables(sql, candidates)
+            if table_name is not None:
+                names |= {table_name}
+            if not names:
+                return None
+        else:
+            names = {table_name}
         with self._query_lock:
-            for name, df in views.items():
-                df.createOrReplaceTempView(name)
+            for name in sorted(names):
+                self._tiered_table_df(
+                    namespace, name, tables, sql, committed
+                ).createOrReplaceTempView(name)
             if self.multi_table:
                 self._drop_stale_views(keep=names)
             return self.spark.sql(sql)
@@ -1040,7 +1058,7 @@ class TieredEngine(LynxEngine):
         sql: str,
         committed: set[str] | None = None,
     ) -> DataFrame:
-        """hot ∪ cold for one table (caller holds _wal_lock and knows
+        """hot ∪ cold for one table (caller holds _query_lock and knows
         at least one tier has it)."""
         hot = None
         if table_name in tables:

@@ -4,6 +4,7 @@ queries, WAL truncation, partition pruning (SURVEY §7 step 6)."""
 from __future__ import annotations
 
 import io
+import threading
 
 import pytest
 
@@ -1210,4 +1211,98 @@ def test_partition_pruning_reads_fewer_files_numfiles_metric(spark, tmp_path):
     assert n_full == 30  # one flush file per day, all read unbounded
     assert n_day == 1  # the bounds pruned 29/30 partitions
     assert day.collect()[0]["n"] == 3
+    eng.wal.close()
+
+
+# ------------------------------------------- query lock scope and reuse
+
+
+def test_write_not_blocked_while_query_builds_cold_relation(
+    tiered, monkeypatch
+):
+    """A query holds the write lock only for its snapshot: a write
+    returns while the query's cold-relation build is still blocked,
+    and the query counts exactly the rows of its snapshot."""
+    _write(tiered, "cold", 1)
+    tiered.flush("ns")
+    _write(tiered, "hot", 2)
+    entered, release = threading.Event(), threading.Event()
+    real = TieredEngine._cold_table
+
+    def blocked(self, *args, **kwargs):
+        entered.set()
+        release.wait(60)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(TieredEngine, "_cold_table", blocked)
+    out: dict = {}
+
+    def run_query():
+        df = tiered.query("ns", "SELECT count(*) AS n FROM cpu")
+        out["n"] = df.collect()[0]["n"]
+
+    q = threading.Thread(target=run_query)
+    q.start()
+    try:
+        assert entered.wait(60), "query never reached the cold build"
+        w = threading.Thread(target=_write, args=(tiered, "late", 3))
+        w.start()
+        w.join(1.0)
+        assert not w.is_alive(), "write waited behind the query"
+        assert q.is_alive(), "query finished before the release"
+    finally:
+        release.set()
+        q.join(120)
+    assert not q.is_alive()
+    assert out["n"] == 2  # snapshot taken before the late write
+    assert tiered.query("ns", "SELECT * FROM cpu").count() == 3
+
+
+def _jobs_for(spark, group: str, fn):
+    """Run fn() under a job group; return (its result, jobs Spark ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cold_relation_reused_until_commit_set_changes(spark, tmp_path):
+    """The cold relation (one footer-merge job to build) is reused
+    while the visible-file set is unchanged, and rebuilt after a
+    flush (new tag column visible) and after optimize + vacuum (only
+    the packed file is read; no deleted file is touched)."""
+    eng = _restart(spark, tmp_path)
+    for i in range(3):
+        _write(eng, str(i), i + 1, {"host": f"h{i}"})
+        eng.flush("ns")
+    sql = "SELECT count(*) AS n FROM cpu"
+    tag = f"reuse-{tmp_path.name}"
+
+    def count():
+        return eng.query("ns", sql).collect()[0]["n"]
+
+    n1, jobs1 = _jobs_for(spark, tag + "-1", count)
+    n2, jobs2 = _jobs_for(spark, tag + "-2", count)
+    assert n1 == n2 == 3
+    assert jobs2 == jobs1 - 1  # no footer-merge job on reuse
+
+    # a flush adding a tag key: the relation is rebuilt with the column
+    _write(eng, "3", 4, {"zone": "z1"})
+    eng.flush("ns")
+    rows = {r["value"]: r for r in eng.query("ns", "SELECT * FROM cpu").collect()}
+    assert sorted(rows) == ["0", "1", "2", "3"]
+    assert rows["3"]["zone"] == "z1" and rows["0"]["zone"] is None
+    assert count() == 4
+
+    # optimize then vacuum: the next query reads only the packed file
+    assert eng.optimize("ns") == 4
+    assert eng.vacuum("ns") == 4
+    df = eng.query("ns", "SELECT * FROM cpu")
+    files = df.inputFiles()
+    assert len(files) == 1 and "part-opt" in files[0]
+    assert sorted(r["value"] for r in df.collect()) == ["0", "1", "2", "3"]
+    assert count() == 4
     eng.wal.close()
